@@ -131,8 +131,7 @@ def minhash_lsh_pairs(documents: DataFrame, n_bands: int = 8,
 
 def ngram_jaccard_pairs(documents: DataFrame, k: int = 3,
                         threshold: float = 0.8,
-                        df_cap: int | None = None,
-                        sh: DataFrame | None = None) -> DataFrame:
+                        df_cap: int | None = None) -> DataFrame:
     """Exact shingle-Jaccard >= threshold, computed via an inverted
     shingle index (explode + join + group) — linear in total postings,
     never all-pairs. The scale path prefilters with minhash_lsh_pairs;
@@ -144,17 +143,11 @@ def ngram_jaccard_pairs(documents: DataFrame, k: int = 3,
     rule). Without it a ubiquitous shingle's posting list makes the
     self-join quadratic in the hottest key; at 100 TB the cap is
     mandatory, locally it defaults off to keep the uncapped oracle."""
-    # ``sh`` lets callers pass the persisted (doc_id, shingle) posting
-    # stage — identical rows by construction; a passed stage is already
-    # materialized, so the staging checkpoints below are SKIPPED for it
-    # (re-staging a cached frame was the round-6 measured regression)
-    sh_passed = sh is not None
-    if sh is None:
-        sh = (
-            _with_shingles(documents, k)
-            .select("doc_id", F.explode("shingles").alias("shingle"))
-            .distinct()
-        )
+    sh = (
+        _with_shingles(documents, k)
+        .select("doc_id", F.explode("shingles").alias("shingle"))
+        .distinct()
+    )
     if df_cap is not None:
         # document frequency via plain groupBy count — MAP-SIDE COMBINED,
         # so the ubiquitous shingle never lands its whole posting list in
@@ -166,8 +159,7 @@ def ngram_jaccard_pairs(documents: DataFrame, k: int = 3,
         # the posting table itself is petabytes; if it ever outgrows the
         # broadcast threshold Spark falls back to a shuffle anti-join
         # whose reduce work per hot key is a drop (AQE splits it).
-        if not sh_passed:
-            sh = sh.localCheckpoint(eager=False)  # postings: count + anti-join
+        sh = sh.localCheckpoint(eager=False)  # postings: count + anti-join
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -176,10 +168,8 @@ def ngram_jaccard_pairs(documents: DataFrame, k: int = 3,
         )
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     # the posting table feeds several consumers (sizes, both self-join
-    # sides): stage it so the derivation runs exactly once (unless the
-    # caller already materialized it)
-    if not sh_passed or df_cap is not None:
-        sh = sh.localCheckpoint(eager=False)
+    # sides): stage it so the derivation runs exactly once
+    sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     common = (
         sh.alias("x")
@@ -706,8 +696,7 @@ def boilerplate_stats(documents: DataFrame, min_words: int = 4,
 
 def containment_pairs(documents: DataFrame, k: int = 3,
                       threshold_ppm: int = 500_000,
-                      df_cap: int | None = None,
-                      sh: DataFrame | None = None) -> DataFrame:
+                      df_cap: int | None = None) -> DataFrame:
     """Directed shingle CONTAINMENT C(src->dst) = |src ∩ dst| / |src|
     on the exact ppm grid — the asymmetric companion to
     ngram_jaccard_pairs (Broder's containment): a short document quoted
@@ -721,16 +710,13 @@ def containment_pairs(documents: DataFrame, k: int = 3,
     directions; integer ppm division keeps the threshold exact across
     engines. The scale path prefilters candidates with
     minhash_lsh_pairs; this is the bounded verifier."""
-    sh_passed = sh is not None
-    if sh is None:
-        sh = (
-            _with_shingles(documents, k)
-            .select("doc_id", F.explode("shingles").alias("shingle"))
-            .distinct()
-        )
+    sh = (
+        _with_shingles(documents, k)
+        .select("doc_id", F.explode("shingles").alias("shingle"))
+        .distinct()
+    )
     if df_cap is not None:
-        if not sh_passed:
-            sh = sh.localCheckpoint(eager=False)
+        sh = sh.localCheckpoint(eager=False)
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -738,8 +724,7 @@ def containment_pairs(documents: DataFrame, k: int = 3,
             .select("shingle")
         )
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    if not sh_passed or df_cap is not None:
-        sh = sh.localCheckpoint(eager=False)  # sizes + both self-join sides
+    sh = sh.localCheckpoint(eager=False)  # sizes + both self-join sides
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     common = (
         sh.alias("x")
@@ -768,8 +753,7 @@ def containment_pairs(documents: DataFrame, k: int = 3,
 
 
 def prefix_filter_pairs(documents: DataFrame, k: int = 3,
-                        threshold: float = 0.8,
-                        sh: DataFrame | None = None) -> DataFrame:
+                        threshold: float = 0.8) -> DataFrame:
     """Exact shingle-Jaccard >= threshold via PPJoin-style PREFIX
     FILTERING (Xiao et al. 2011): order each document's shingles by
     ascending global document frequency (rarest first, shingle text
@@ -789,15 +773,12 @@ def prefix_filter_pairs(documents: DataFrame, k: int = 3,
     or never. No df_cap needed: the frequency ORDER does the work the
     cap approximates. All stream-sized stages are grouped aggs or
     equi-joins; the per-doc rank window partitions by doc_id."""
-    sh_passed = sh is not None
-    if sh is None:
-        sh = (
-            _with_shingles(documents, k)
-            .select("doc_id", F.explode("shingles").alias("shingle"))
-            .distinct()
-        )
-    if not sh_passed:
-        sh = sh.localCheckpoint(eager=False)  # df + rank + verify arrays
+    sh = (
+        _with_shingles(documents, k)
+        .select("doc_id", F.explode("shingles").alias("shingle"))
+        .distinct()
+        .localCheckpoint(eager=False)  # df + rank + verify arrays
+    )
     dfreq = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("df"))
     ranked = sh.join(dfreq, "shingle").withColumn(
@@ -1041,8 +1022,7 @@ def quality_keep_map(documents: DataFrame, n_bands: int = 8,
     )
 
 
-def df_spectrum(documents: DataFrame, k: int = 3,
-                sh: DataFrame | None = None) -> DataFrame:
+def df_spectrum(documents: DataFrame, k: int = 3) -> DataFrame:
     """Shingle document-frequency spectrum in log2 buckets — the
     dedup-difficulty planning read that sizes ngram_jaccard's df_cap
     and the bloom gate BEFORE building an inverted index: for each
@@ -1059,10 +1039,7 @@ def df_spectrum(documents: DataFrame, k: int = 3,
     """
     from deepref_spark.operators.graph import _log2_bucket_case
 
-    if sh is not None:
-        posts = sh.select("doc_id", F.col("shingle").alias("s"))
-    else:
-        posts = (
+    posts = (
         _with_shingles(documents, k=k)
         .select("doc_id", F.explode("shingles").alias("s"))
         .distinct()

@@ -196,17 +196,6 @@ def score_entity(spark: SparkSession, mentions: DataFrame, n_relations: int,
         mdl.build_weights(n_relations, seed=mdl.SEED + 1009 * seed)
     )
 
-    return score_entity_flat(spark, _flat_mentions(mentions), weights_bc, max_length)
-
-
-def score_entity_flat(spark: SparkSession, flat: DataFrame, weights_bc,
-                      max_length: int = 128) -> DataFrame:
-    """The scoring crossing over an already-flat mention projection
-    (sent_id, doc_id, relation, h_name, t_name, token, h0, h1, t0, t1)
-    — shared by score_entity and the JVM-parse fast path
-    (operators/parse_jvm.py), which produces this shape without any
-    Python."""
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         weights = None
         for pdf in batches:
@@ -219,4 +208,4 @@ def score_entity_flat(spark: SparkSession, flat: DataFrame, weights_bc,
             out = {c: pdf[c].to_numpy() for c in _PASS_COLS}
             yield pd.DataFrame({**out, "pred_id": pred, "score": score})
 
-    return flat.mapInPandas(run, schema=SCORED_SCHEMA)
+    return _flat_mentions(mentions).mapInPandas(run, schema=SCORED_SCHEMA)

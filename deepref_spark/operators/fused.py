@@ -89,148 +89,3 @@ def extract_scored_fused(
             })
 
     return sentences.mapInPandas(run, schema=SCORED_SCHEMA)
-
-
-def extract_scored_jvm(
-    spark: SparkSession,
-    sentences: DataFrame,
-    n_relations: int,
-    preprocessing: list[str] | None = None,
-    entity_replacement: str = "ENTITY",
-    max_length: int = 128,
-    tagger_backend: str = "ruletag",
-) -> DataFrame:
-    """JVM-parse flagship path: parse runs as built-in expressions
-    (operators/parse_jvm.py); the single Arrow crossing does batched
-    tokenize + numpy forward — with NO preprocessing that crossing has
-    zero per-row Python; with a preprocessing variant only the
-    reference preproc kernels run per row inside it (the parse stays
-    JVM-side). Rows the vector parse cannot reproduce bit-exactly
-    (non-ASCII, exotic separators, negative derived spans) run through
-    the reference Python kernels and union back in; marker-missing
-    rows drop in both engines. Equivalence with extract_scored_fused
-    is asserted by tests/test_parse_jvm.py on corpora covering every
-    routing class and preprocessing variant.
-
-    The JVM parse/preproc expressions mirror the ``ruletag`` cascade
-    ONLY — any other ``tagger_backend`` would change preprocessing tag
-    decisions, so those requests route wholesale through the fused
-    Arrow path (same results, per-row tagger) instead of silently
-    running ruletag tags."""
-    if tagger_backend != "ruletag":
-        return extract_scored_fused(
-            spark, sentences, n_relations,
-            preprocessing=preprocessing, entity_replacement=entity_replacement,
-            max_length=max_length, tagger_backend=tagger_backend,
-        )
-    from deepref_spark.operators.encoders import score_entity_flat
-    from deepref_spark.operators.parse_jvm import split_jvm_eligible
-
-    from pyspark.sql import functions as F
-
-    from deepref_spark.operators.preproc_jvm import (
-        apply_preprocessing_jvm,
-        preproc_eligible_cond,
-    )
-
-    kinds = refsem.normalize_preproc(preprocessing or [])
-    weights_bc = spark.sparkContext.broadcast(mdl.build_weights(n_relations))
-    clean, py_rows = split_jvm_eligible(sentences)
-    if kinds:
-        # three tiers: (a) span-safe rows — preprocessing composed as
-        # built-in expressions, zero per-row Python end to end;
-        # (b) span-degenerate rows — JVM parse + per-row reference
-        # preproc kernels in the crossing (their raise-and-skip
-        # semantics preserved); (c) non-ASCII etc. — full Python.
-        # clean feeds BOTH tiers — stage it or the untag/lower/name
-        # chain recomputes over the full corpus per tier (no
-        # cross-branch CSE in Spark).
-        clean = clean.localCheckpoint(eager=False)
-        safe = F.expr(preproc_eligible_cond())
-        jvm_pre = apply_preprocessing_jvm(
-            clean.where(safe), kinds, entity_replacement
-        )
-        scored = score_entity_flat(spark, jvm_pre, weights_bc, max_length)
-        scored = scored.unionByName(_score_flat_preproc(
-            clean.where(~safe), weights_bc, kinds, entity_replacement,
-            max_length, tagger_backend,
-        ))
-    else:
-        scored = score_entity_flat(spark, clean, weights_bc, max_length)
-    fallback = extract_scored_fused(
-        spark, py_rows, n_relations,
-        preprocessing=preprocessing, entity_replacement=entity_replacement,
-        max_length=max_length, tagger_backend=tagger_backend,
-    )
-    return scored.unionByName(fallback)
-
-
-def _score_flat_preproc(flat: DataFrame, weights_bc, kinds: list[str],
-                        entity_replacement: str, max_length: int,
-                        tagger_backend: str = "ruletag") -> DataFrame:
-    """Scoring crossing over the JVM-parsed flat mentions with a
-    preprocessing variant: reconstruct the Mention per row (tags from
-    the memoized rule cascade over the already-lowered tokens — the
-    same tagger(lowered) call build_mention makes), apply the reference
-    preproc kernels, then batch-tokenize. Rows where the kernels raise
-    (the fused operator's skip semantics) drop identically."""
-    from deepref_spark.operators.tokenize_batch import bert_entity_tokenize_batch
-
-    # invariant, not dead generality: the surrounding JVM preproc
-    # expressions mirror the ruletag cascade — extract_scored_jvm's
-    # early return is the only guard, so fail loudly if a refactor
-    # ever loosens it and routes another backend here
-    assert tagger_backend == "ruletag", (
-        f"_score_flat_preproc requires ruletag (JVM preproc tags are "
-        f"ruletag-derived); got {tagger_backend!r}"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tagger = get_tagger(tagger_backend)
-        weights = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if weights is None:
-                weights = mdl.cached_weights(weights_bc)
-            keep = {k: [] for k in ("sent_id", "doc_id", "relation")}
-            h_names, t_names = [], []
-            toks_l, h0_l, h1_l, t0_l, t1_l = [], [], [], [], []
-            for sent_id, doc_id, relation, token, h_name, t_name, h0, h1, t0, t1 in zip(
-                pdf["sent_id"], pdf["doc_id"], pdf["relation"], pdf["token"],
-                pdf["h_name"], pdf["t_name"], pdf["h0"], pdf["h1"], pdf["t0"], pdf["t1"],
-            ):
-                token = list(token)
-                pos_tags, deps, ner = tagger(token)
-                m = refsem.Mention(
-                    token=token,
-                    h={"name": h_name, "pos": [int(h0), int(h1)]},
-                    t={"name": t_name, "pos": [int(t0), int(t1)]},
-                    relation=relation, pos_tags=pos_tags, deps=deps, ner=ner,
-                )
-                try:
-                    m = refsem.apply_preprocessing(m, kinds, entity_replacement)
-                except (ValueError, IndexError, AssertionError):
-                    continue
-                keep["sent_id"].append(sent_id)
-                keep["doc_id"].append(doc_id)
-                keep["relation"].append(relation)
-                h_names.append(m.h["name"])
-                t_names.append(m.t["name"])
-                toks_l.append(m.token)
-                h0_l.append(m.h["pos"][0])
-                h1_l.append(m.h["pos"][1])
-                t0_l.append(m.t["pos"][0])
-                t1_l.append(m.t["pos"][1])
-            if not keep["sent_id"]:
-                continue
-            ids, mask, p1, p2 = bert_entity_tokenize_batch(
-                toks_l, h0_l, h1_l, t0_l, t1_l, max_length=max_length
-            )
-            pred, score = mdl.forward_batch(weights, ids, mask, p1, p2)
-            yield pd.DataFrame({
-                **keep, "h_name": h_names, "t_name": t_names,
-                "pred_id": pred, "score": score,
-            })
-
-    return flat.mapInPandas(run, schema=SCORED_SCHEMA)

@@ -2618,19 +2618,23 @@ def modularity_profile(edges: DataFrame, labels: DataFrame,
     # size-adaptive (round 6): the ppm grid is all BIGINT floor
     # divisions on non-negative operands (Python // == Spark div
     # there), so the driver twin is exact; same double gate as
-    # community_quality (und rows AND label rows under the cap); an
-    # EMPTY graph falls through (the distributed agg emits a NULL
-    # __total__ row there — keep that single source of truth).
+    # community_quality (und rows AND label rows under the cap). An
+    # EMPTY graph or labels disjoint from the edges fall through (the
+    # distributed agg emits a NULL __total__ row there — keep that
+    # single source of truth), and so do NULL entities/communities,
+    # whose join and grouping rules a dict walk does not reproduce.
     rows = _edge_rows_if_small(und)
     if rows:
         lab_rows = _collect_if_small(
             labels.select("entity", "community"),
             "deepref.graph.driver_max_edges")
-        if lab_rows is not None and len(dict(lab_rows)) == len(lab_rows):
+        lab = dict(lab_rows or [])
+        if (lab_rows is not None and len(lab) == len(lab_rows)
+                and None not in lab and None not in lab.values()
+                and any(s in lab and d in lab for s, d in rows)):
             import pandas as pd
             import pyspark.sql.types as T
 
-            lab = dict(lab_rows)
             n_nodes_m: dict = {}
             for _, c in lab_rows:
                 n_nodes_m[c] = n_nodes_m.get(c, 0) + 1

@@ -33,40 +33,25 @@ def extract_scored(
     """docs -> scored mentions with predicted relation names.
 
     fused=True (default): parse/preprocess/tokenize/score in ONE
-    mapInPandas crossing. engine picks the parse/preproc
-    implementation inside that shape — both are row-for-row equal
-    (tests/test_parse_jvm.py):
-
-    * "arrow" (default): the memoized reference kernels inside the
-      Arrow batch, batched tokenize+forward. MEASURED FASTER at every
-      local scale tried (30k docs / 8 cores, min-of-3: 1.90s vs 3.33s
-      no-preproc, 2.18s vs 4.45s with sw+d) — the Zipf-skewed token
-      distribution lets per-word work amortize to dict hits, which
-      per-occurrence JVM regex/array expressions cannot match.
-    * "jvm": parse (and span-safe preprocessing) as built-in
-      expressions (operators/parse_jvm.py + preproc_jvm.py); the
-      crossing does only batched tokenize+forward. No Python worker
-      dependency before the scorer and full plan transparency — the
-      operational choice where Python workers are the constraint.
+    mapInPandas crossing (operators/fused.py). Parse and preprocessing
+    run the memoized reference kernels per row inside the Arrow batch;
+    tokenize and the encoder forward run vectorized over the batch.
 
     fused=False: the modular operator chain — same kernels, same
     output, 3 extra Python crossings; kept for stage-level inspection
-    and the operator-parity tests."""
-    if engine not in ("arrow", "jvm"):
-        # a typo'd engine must not silently measure/run the arrow path
-        # while evidence records the requested name
-        raise ValueError(f"unknown engine {engine!r}: expected 'arrow' or 'jvm'")
+    and as the reference the fused path is tested against.
+
+    ``engine`` stays for callers that pass it and accepts only
+    "arrow"; any other value raises ValueError."""
+    if engine != "arrow":
+        raise ValueError(
+            f"unknown engine {engine!r}: the jvm extraction engine was "
+            "removed; only 'arrow' is supported"
+        )
     relations = relations or RELATION_NAMES
     sentences = convert.text_sentences(docs)
     rel2id = score.rel2id_from_relations(relations)
-    if fused and engine == "jvm":
-        from deepref_spark.operators.fused import extract_scored_jvm
-
-        scored = extract_scored_jvm(
-            spark, sentences, n_relations=len(rel2id),
-            preprocessing=preprocessing, max_length=max_length,
-        )
-    elif fused:
+    if fused:
         from deepref_spark.operators.fused import extract_scored_fused
 
         scored = extract_scored_fused(
@@ -139,13 +124,10 @@ def triples_from_scored(scored: DataFrame, canonicalize: bool = True,
 
 def run_pipeline(spark: SparkSession, docs: DataFrame,
                  preprocessing: list[str] | None = None,
-                 warehouse: str | None = None,
-                 engine: str = "arrow") -> DataFrame:
+                 warehouse: str | None = None) -> DataFrame:
     """Full extraction; when ``warehouse`` is set, scored mentions and
-    triples persist as resumable stage tables. ``engine`` selects the
-    parse/preproc implementation ("arrow" default / "jvm" — see
-    extract_scored for the measured decision rule)."""
-    scored = extract_scored(spark, docs, preprocessing, engine=engine)
+    triples persist as resumable stage tables."""
+    scored = extract_scored(spark, docs, preprocessing)
     if warehouse:
         from deepref_spark.io import tables
 

@@ -51,7 +51,7 @@ _STAGE_CACHE_MAX = 64  # ~14 stage kinds x a handful of sf_dirs; cap so
 # a few MB at bench scales)
 
 
-def clear_mentions_cache() -> None:
+def clear_stage_cache() -> None:
     """Unpersist and drop every cached stage table (call between
     benchmark scales or before shutting a long-lived session)."""
     for df in _STAGE_CACHE.values():
@@ -61,10 +61,6 @@ def clear_mentions_cache() -> None:
             pass
     _STAGE_CACHE.clear()
     _PQ_BOOKS_CACHE.clear()
-
-
-# alias: the cache now holds every shared stage, not just mentions
-clear_stage_cache = clear_mentions_cache
 
 
 def _stage(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:

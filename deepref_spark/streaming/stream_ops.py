@@ -49,12 +49,15 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Batch sessionization: per-user session ids from gaps > threshold
     (lag + cumulative sum), then per-session rollup."""
     w = Window.partitionBy("user_id").orderBy("ts")
-    # parquet µs timestamps read as TIMESTAMP_NTZ can't cast straight to
-    # long; hop through timestamp (session TZ pinned to UTC)
-    secs = F.col("ts").cast("timestamp").cast("long")
-    gap = secs - F.lag(secs).over(w)
+    # compare on whole microseconds: a cast to long seconds truncates,
+    # merging gaps of gap_minutes*60 s plus a fraction into one session.
+    # parquet µs timestamps read as TIMESTAMP_NTZ need the hop through
+    # timestamp (session TZ pinned to UTC)
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = micros - F.lag(micros).over(w)
     marked = (
-        F.when(gap.isNull() | (gap > gap_minutes * 60), F.lit(1)).otherwise(F.lit(0))
+        F.when(gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), F.lit(1))
+        .otherwise(F.lit(0))
     )
     with_session = (
         events.withColumn("new_session", marked)

@@ -37,12 +37,6 @@ def main() -> None:
     ap.add_argument("--preprocessing", default="")
     ap.add_argument("--warehouse", default=None)
     ap.add_argument("--candidates", action="store_true")
-    ap.add_argument("--engine", choices=("arrow", "jvm"), default="arrow",
-                    help="parse/preproc engine: 'arrow' (memoized kernels "
-                    "inside the Arrow crossing; measured fastest at every "
-                    "local scale) or 'jvm' (built-in expressions before the "
-                    "scorer; pick when Python workers are the cluster "
-                    "constraint — see BENCH.md)")
     args = ap.parse_args()
 
     # SparkSession.builder.getOrCreate() inherits every --master/--conf
@@ -88,7 +82,7 @@ def main() -> None:
             docs = synth.generate_docs(spark, args.n_docs)
         triples = run_pipeline(
             spark, docs, preprocessing=preprocessing or None,
-            warehouse=args.warehouse, engine=args.engine,
+            warehouse=args.warehouse,
         )
 
     import os

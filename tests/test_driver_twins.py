@@ -219,3 +219,42 @@ def test_sorted_neighborhood_twin(spark, edges):
     a, b = _both_paths(
         spark, lambda: sorted_neighborhood_pairs(ents, window=3))
     assert a == b and a
+
+
+_MOD_EDGES = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "x"), ("x", "y")]
+
+
+@pytest.mark.parametrize("labels", [
+    # every node labelled: the driver path's home ground
+    [("a", "L1"), ("b", "L1"), ("c", "L1"), ("x", "L2"), ("y", "L2")],
+    # labels disjoint from the edges: no edge end carries a label
+    [("p", "L1"), ("q", "L2")],
+    # a NULL community on an edge end
+    [("a", "L1"), ("b", "L1"), ("c", None), ("x", "L2"), ("y", "L2")],
+    # a NULL entity next to real labels
+    [("a", "L1"), ("b", "L1"), (None, "L2"), ("x", "L2")],
+], ids=["labelled", "disjoint", "null_community", "null_entity"])
+def test_modularity_profile_twin_adversarial(spark, labels):
+    """The driver path must equal the distributed path (rows AND
+    column types) on inputs where a dict walk and a SQL join disagree
+    unless the gate falls through: disjoint labels (NULL __total__
+    sums) and NULL entities/communities."""
+    from deepref_spark.operators.graph import modularity_profile
+
+    edges = spark.createDataFrame(_MOD_EDGES, "src string, dst string")
+    lab = spark.createDataFrame(labels, "entity string, community string")
+
+    def run():
+        out = modularity_profile(edges, lab)
+        rows = sorted((tuple(r) for r in out.collect()), key=repr)
+        return rows, [f.dataType for f in out.schema.fields]
+
+    gate = "deepref.graph.driver_max_edges"
+    driver = run()
+    spark.conf.set(gate, "0")
+    try:
+        dist = run()
+    finally:
+        spark.conf.unset(gate)
+    assert driver == dist
+    assert any(r[0] == "__total__" for r in driver[0])

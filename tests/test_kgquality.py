@@ -174,6 +174,18 @@ def test_rule_mining_excludes_reflexive_and_caps_hubs(spark):
     assert uncapped > 0 and capped == 0
 
 
+def test_rule_mining_rejects_body_with_hub_cap(spark):
+    """A passed wedge table is uncapped: combining it with hub_cap would
+    silently drop the cap, so the call must fail loudly instead."""
+    from deepref_spark.operators.kgquality import mine_path_rules
+
+    t = _triples(spark, [("a", "p", "h"), ("h", "q", "c")])
+    body = t.select(F.lit("a").alias("x"), F.lit("p").alias("p1"),
+                    F.lit("q").alias("p2"), F.lit("c").alias("z"))
+    with pytest.raises(ValueError, match="hub_cap"):
+        mine_path_rules(t, min_support=1, hub_cap=3, body=body)
+
+
 def test_inverse_symmetry_scores(spark):
     from deepref_spark.operators.kgquality import inverse_symmetry
 

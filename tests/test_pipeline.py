@@ -132,15 +132,98 @@ def test_tokenize_matches_oracle(spark, docs):
         assert g["pos1"] == p1 and g["pos2"] == p2
 
 
-def test_fused_equals_modular(spark, docs):
+# Every parse routing class: clean, tail-first, unrelated markers,
+# marker-missing, duplicated markers, touching markers, empty markers,
+# non-ASCII letters, a non-breaking space, whitespace runs and tabs,
+# empty string, upper case.
+# Rows 3, 4 and 11 lack a marker pair and must drop in both paths.
+_ROUTING_ROWS = [
+    ("member-collection",
+     "the ENTITYSTART aspirin ENTITYEND helps ENTITYOTHERSTART warfarin ENTITYOTHEREND daily"),
+    ("entity-origin",
+     "ENTITYOTHERSTART city ENTITYOTHEREND before ENTITYSTART river delta ENTITYEND flows"),
+    ("message-topic",
+     "ENTITYUNRELATEDSTART senate ENTITYUNRELATEDEND near ENTITYSTART harbor ENTITYEND and "
+     "ENTITYOTHERSTART violin ENTITYOTHEREND music ENTITYUNRELATEDSTART comet ENTITYUNRELATEDEND"),
+    ("Other", "no markers at all in this sentence"),
+    ("Other", "only ENTITYSTART aspirin ENTITYEND here"),
+    ("member-collection",
+     "dup ENTITYSTART a ENTITYEND mid ENTITYSTART x ENTITYEND and ENTITYOTHERSTART b ENTITYOTHEREND"),
+    ("entity-origin",
+     "ENTITYSTART aspirin ENTITYEND ENTITYOTHERSTART warfarin ENTITYOTHEREND"),
+    ("entity-origin", "ENTITYSTART ENTITYEND empty ENTITYOTHERSTART warfarin ENTITYOTHEREND"),
+    ("message-topic",
+     "café talk ENTITYSTART résumé ENTITYEND with ENTITYOTHERSTART naïve ENTITYOTHEREND plan"),
+    ("member-collection",
+     "odd\u00a0space ENTITYSTART aspirin ENTITYEND with ENTITYOTHERSTART city ENTITYOTHEREND"),
+    ("entity-origin",
+     "  leading   ENTITYSTART aspirin ENTITYEND \t tabs \t ENTITYOTHERSTART city ENTITYOTHEREND  "),
+    ("Other", ""),
+    ("member-collection",
+     "UPPER Case ENTITYSTART Aspirin UNIT ENTITYEND vs ENTITYOTHERSTART WARFARIN ENTITYOTHEREND"),
+]
+_ROUTING_DROPPED = {3, 4, 11}
+
+# Bracketed spans, stopwords inside and outside entities, digits, and
+# touching entity spans for the blinding variants.
+_BRACKET_ROWS = [
+    ("member-collection",
+     "the ( noisy aside ) ENTITYSTART aspirin ENTITYEND with the "
+     "ENTITYOTHERSTART warfarin ENTITYOTHEREND in 1999"),
+    ("entity-origin",
+     "ENTITYSTART the aspirin ENTITYEND ENTITYOTHERSTART warfarin city ENTITYOTHEREND now"),
+    ("message-topic",
+     "( unclosed ENTITYSTART city ENTITYEND more ENTITYOTHERSTART river ENTITYOTHEREND words"),
+    ("Other",
+     "closer ) first ENTITYSTART engine ENTITYEND [ boxy ] ENTITYOTHERSTART company ENTITYOTHEREND"),
+]
+
+
+def _corpus_docs(spark, rows):
+    """One single-text-span doc per (relation, tagged) row, so the
+    sentence of row i is d{i}#0."""
+    return spark.createDataFrame(
+        [(f"d{i}", [("text", f"{rel}\t{tagged}", "", 0)])
+         for i, (rel, tagged) in enumerate(rows)],
+        "doc_id string, spans array<struct<kind string, text string, "
+        "media_ref string, offset int>>",
+    )
+
+
+_CORPORA = {"routing": _ROUTING_ROWS, "brackets": _BRACKET_ROWS}
+
+
+@pytest.mark.parametrize("corpus,prep", [
+    ("synth", None), ("synth", ["sw", "d"]), ("routing", None),
+    *(("brackets", v) for v in (
+        ["sw"], ["b"], ["d"], ["eb"], ["nb"], ["sw", "p", "b", "d", "nb"])),
+], ids=["synth-none", "synth-sw-d", "routing-none", "brackets-sw", "brackets-b",
+        "brackets-d", "brackets-eb", "brackets-nb", "brackets-sw-p-b-d-nb"])
+def test_fused_equals_modular(spark, docs, corpus, prep):
     """The fused single-crossing operator must be bit-identical to the
-    modular parse->preprocess->tokenize->score chain."""
-    for prep in (None, ["sw", "d"]):
-        a = extract_scored(spark, docs, preprocessing=prep, fused=True)
-        b = extract_scored(spark, docs, preprocessing=prep, fused=False)
-        ra = {r["sent_id"]: (r["pred_id"], r["score"], r["h_name"], r["t_name"]) for r in a.collect()}
-        rb = {r["sent_id"]: (r["pred_id"], r["score"], r["h_name"], r["t_name"]) for r in b.collect()}
-        assert ra == rb
+    modular parse->preprocess->tokenize->score chain, on synth docs and
+    on hand-built corpora covering every parse routing class and the
+    bracket/stopword/digit variants."""
+    src = docs if corpus == "synth" else _corpus_docs(spark, _CORPORA[corpus])
+    ra, rb = (
+        {r["sent_id"]: (r["pred_id"], r["score"], r["h_name"], r["t_name"])
+         for r in extract_scored(spark, src, preprocessing=prep, fused=fused).collect()}
+        for fused in (True, False)
+    )
+    assert ra == rb
+    if corpus == "routing":  # marker-missing rows drop in both paths
+        assert set(ra) == {f"d{i}#0" for i in range(len(_ROUTING_ROWS))
+                           if i not in _ROUTING_DROPPED}
+
+
+def test_extract_scored_engine_keyword(spark, docs):
+    """engine="arrow" is the default path; the removed engine name
+    fails loudly instead of falling back."""
+    key = lambda df: sorted(  # noqa: E731
+        (r["sent_id"], r["pred_id"], r["score"]) for r in df.collect())
+    assert key(extract_scored(spark, docs, engine="arrow")) == key(extract_scored(spark, docs))
+    with pytest.raises(ValueError, match="removed"):
+        extract_scored(spark, docs, engine="jvm")
 
 
 def test_size_gated_broadcast_non_broadcast_path(spark, docs):

@@ -198,3 +198,35 @@ def test_queries_import_is_io_free():
     r = subprocess.run([sys.executable, "-c", code], cwd=repo,
                        env={"PYTHONPATH": repo, "PATH": "/usr/bin:/bin"})
     assert r.returncode == 0, "duckdb was imported at queries import time"
+
+
+def test_sessionize_fractional_gap_matches_oracle(spark, tmp_path):
+    """A gap of 1800.5 s opens a new session under the oracle's
+    fractional epoch(ts) > 1800 test; an exact 1800 s gap does not.
+    Seconds truncated to whole numbers would merge the first pair."""
+    import duckdb
+
+    from deepref_spark.queries import events_sessionize, oracle_sql_for
+
+    path = f"{tmp_path}/events.parquet"
+    duckdb.sql(f"""
+        COPY (
+          SELECT CAST(event_id AS BIGINT) AS event_id, ts,
+                 CAST(user_id AS BIGINT) AS user_id, event_type,
+                 CAST(value AS DOUBLE) AS value, props
+          FROM (VALUES
+            (1, TIMESTAMP '2024-01-01 10:00:00',   7, 'click', 1.0, ''),
+            (2, TIMESTAMP '2024-01-01 10:30:00.5', 7, 'click', 2.0, ''),
+            (3, TIMESTAMP '2024-01-01 11:00:00.5', 7, 'click', 4.0, '')
+          ) AS t(event_id, ts, user_id, event_type, value, props))
+        TO '{path}' (FORMAT parquet)""")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    try:
+        ok, detail = compare_query(
+            spark, con, events_sessionize, oracle_sql_for("events_sessionize"),
+            str(tmp_path))
+    finally:
+        con.close()
+    assert ok, detail
+    assert detail == "2 rows"
