@@ -2593,14 +2593,17 @@ def session_funnel(events: DataFrame, steps: tuple = FUNNEL_STEPS,
     """
     codes = " ".join(f"WHEN '{s}' THEN {i + 1}" for i, s in enumerate(steps))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # gaps in whole microseconds, as stream_ops.sessionize: whole
+    # seconds would merge a gap of gap_minutes*60 s plus a fraction
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
     marked = events.select(
         "user_id", "ts", "event_id",
         F.expr(f"CASE event_type {codes} ELSE 0 END").alias("code"),
     ).withColumn(
         "new_session",
         F.when(F.lag("ts").over(w).isNull()
-               | (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-                  > gap_minutes * 60), 1).otherwise(0),
+               | (micros - F.lag(micros).over(w)
+                  > gap_minutes * 60 * 1_000_000), 1).otherwise(0),
     ).withColumn(
         "session_seq",
         F.sum("new_session").over(

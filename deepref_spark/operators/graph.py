@@ -24,6 +24,7 @@ and can flip a 6dp rounding between engines.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
 from deepref_spark import portable
@@ -81,11 +82,53 @@ def _round6_spark(x: float) -> float:
                                            rounding=ROUND_HALF_UP))
 
 
-def _edge_rows_if_small(edges: DataFrame, conf_key: str = "deepref.graph.driver_max_edges"):
-    """Collected distinct (src, dst) list when the edge frame fits the
-    conf-gated driver cap, else None — the size-adaptive gate the
-    whole unit-grid family shares (see _collect_if_small below)."""
-    return _collect_if_small(edges.select("src", "dst"), conf_key)
+# Size-adaptive driver gate (round 6) shared by every driver twin in
+# this module and linking.sorted_neighborhood_pairs — the same measured
+# trade as linking.DRIVER_CC_MAX_EDGES: below the cap, collected rows
+# and a single-threaded Python pass beat the multi-round distributed
+# loop by an order of magnitude; above it, each operator's distributed
+# path is the only thing that scales. The cap bounds the one driver
+# collect by construction (the VERDICT .collect() audit discipline).
+DRIVER_MAX_EDGES = 200_000
+DRIVER_CAP_KEY = "deepref.graph.driver_max_edges"
+
+
+def _collect_if_small(edges: DataFrame, conf_key: str):
+    """Count the (materialized) frame; return its collected rows as
+    tuples when it fits under the driver cap and holds no NULL, else
+    None (caller falls through to the distributed path). The count
+    doubles as the materialization action for a lazy localCheckpoint,
+    so the upstream pipeline runs exactly once whichever path is taken.
+
+    This is the only place that decides whether a twin runs. A dict
+    walk neither reproduces SQL's NULL join and grouping rules nor
+    sorts None next to a string, so any NULL sends the call to the
+    distributed reference; twins may then assume NULL-free rows."""
+    cap = int(edges.sparkSession.conf.get(conf_key, str(DRIVER_MAX_EDGES)))
+    if edges.count() > cap:
+        return None
+    rows = [tuple(r) for r in edges.collect()]
+    if any(None in r for r in rows):
+        return None
+    return rows
+
+
+def _edge_rows_if_small(edges: DataFrame):
+    """Collected (src, dst) list of the edge frame, or None — the
+    driver gate over the edge columns every graph twin reads."""
+    return _collect_if_small(edges.select("src", "dst"), DRIVER_CAP_KEY)
+
+
+def _twin_frame(spark, rows, cols) -> DataFrame:
+    """A driver twin's result: Python ``rows`` typed by ``cols``, a
+    list of (name, DataType) pairs in output order. Fields are
+    non-nullable because _collect_if_small hands twins NULL-free
+    rows only."""
+    import pandas as pd
+
+    schema = T.StructType([T.StructField(n, t, False) for n, t in cols])
+    return spark.createDataFrame(
+        pd.DataFrame(list(rows), columns=schema.names), schema=schema)
 
 
 def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
@@ -112,9 +155,6 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     # below stays the at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         outd: dict = {}
         nodes_s: set = set()
         for a, b in rows:
@@ -129,14 +169,10 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
                 inflow[b] = inflow.get(b, 0) + u[a] // outd[a]
             u = {n: base_i + (DAMP_NUM * inflow.get(n, 0)) // DAMP_DEN
                  for n in nodes_s}
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("pagerank", T.DoubleType(), False),
-        ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame([(n, u[n] / float(UNIT)) for n in nodes_s],
-                         columns=["entity", "pagerank"]), schema=schema)
+        return _twin_frame(
+            edges.sparkSession, [(n, u[n] / float(UNIT)) for n in nodes_s],
+            [("entity", edges.schema["src"].dataType),
+             ("pagerank", T.DoubleType())])
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .union(edges.select(F.col("dst").alias("entity")))
@@ -326,9 +362,6 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame:
     # the distributed round loop below stays the at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         und = {(min(a, b), max(a, b)) for a, b in rows}
         for _ in range(max_rounds):
             deg: dict = {}
@@ -337,15 +370,10 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame:
                 deg[b] = deg.get(b, 0) + 1
             bad = {v for v, d in deg.items() if d < k}
             if not bad:
-                node_t = edges.schema["src"].dataType
-                schema = T.StructType([
-                    T.StructField("entity", node_t, False),
-                    T.StructField("core_deg", T.LongType(), False),
-                ])
-                return edges.sparkSession.createDataFrame(
-                    pd.DataFrame(sorted(deg.items()),
-                                 columns=["entity", "core_deg"]),
-                    schema=schema)
+                return _twin_frame(
+                    edges.sparkSession, sorted(deg.items()),
+                    [("entity", edges.schema["src"].dataType),
+                     ("core_deg", T.LongType())])
             und = {(a, b) for a, b in und if a not in bad and b not in bad}
         raise RuntimeError(
             f"kcore(k={k}) did not converge in {max_rounds} rounds")
@@ -434,9 +462,6 @@ def multihop(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     # stay the at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         adj: dict = {}
         for a, b in rows:
             adj.setdefault(a, []).append(b)
@@ -458,17 +483,11 @@ def multihop(edges: DataFrame, max_hops: int = 3) -> DataFrame:
                 else:
                     agg[(a, b)] = [k, c]
         node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("src", node_t, False),
-            T.StructField("dst", node_t, False),
-            T.StructField("min_hops", T.IntegerType(), False),
-            T.StructField("n_paths", T.LongType(), False),
-        ])
-        out_rows = [(a, b, mh, np) for (a, b), (mh, np) in agg.items()]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows,
-                         columns=["src", "dst", "min_hops", "n_paths"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession,
+            [(a, b, mh, np) for (a, b), (mh, np) in agg.items()],
+            [("src", node_t), ("dst", node_t),
+             ("min_hops", T.IntegerType()), ("n_paths", T.LongType())])
     hop = edges.select(
         "src", "dst", F.lit(1).cast("long").alias("n_paths")
     ).localCheckpoint(eager=False)
@@ -547,9 +566,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # collected rows under the driver cap; distributed below at scale.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         und_s = {(min(a, b), max(a, b)) for a, b in rows}
         deg: dict = {}
         for a, b in und_s:
@@ -573,23 +589,17 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
                         tcnt[x] = tcnt.get(x, 0) + 1
                         tcnt[y] = tcnt.get(y, 0) + 1
                         tcnt[z] = tcnt.get(z, 0) + 1
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("und_degree", T.LongType(), False),
-            T.StructField("n_triangles", T.LongType(), False),
-            T.StructField("clustering", T.DoubleType(), False),
-        ])
         out_rows = []
         for v, d in sorted(deg.items()):
             t = tcnt.get(v, 0)
             c = (_round6_spark((2.0 * t) / (d * (d - 1.0)))
                  if d >= 2 else 0.0)
             out_rows.append((v, d, t, c))
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "und_degree",
-                                            "n_triangles", "clustering"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, out_rows,
+            [("entity", edges.schema["src"].dataType),
+             ("und_degree", T.LongType()), ("n_triangles", T.LongType()),
+             ("clustering", T.DoubleType())])
     und = (
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -789,9 +799,6 @@ def label_prop(edges: DataFrame, iters: int = 2,
     # the at-scale path.
     rows = _edge_rows_if_small(und)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         nbrs: dict = {}
         for s, d in rows:
             nbrs.setdefault(s, []).append(d)
@@ -810,14 +817,8 @@ def label_prop(edges: DataFrame, iters: int = 2,
                     new_lbl[v] = max(l for l, c in cnt.items() if c == mc)
             lbl = new_lbl
         node_t = und.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("community", node_t, False),
-        ])
-        return und.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(lbl.items()),
-                         columns=["entity", "community"]),
-            schema=schema)
+        return _twin_frame(und.sparkSession, sorted(lbl.items()),
+                           [("entity", node_t), ("community", node_t)])
     labels = (
         und.select(F.col("src").alias("v")).distinct()
         .withColumn("lbl", F.col("v"))
@@ -862,9 +863,6 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     # distributed loop below stays the at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         nodes_s: set = set()
         for a, b in rows:
             nodes_s.add(a)
@@ -886,18 +884,13 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
             for a, b in rows:
                 h_raw[a] += auth_m[b]
             hub_m = _norm_m(h_raw)
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("authority", T.DoubleType(), False),
-            T.StructField("hub", T.DoubleType(), False),
-        ])
         out_rows = [(n, _round6_spark(auth_m[n] / float(UNIT)),
                      _round6_spark(hub_m[n] / float(UNIT)))
                     for n in nodes_s]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "authority", "hub"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, out_rows,
+            [("entity", edges.schema["src"].dataType),
+             ("authority", T.DoubleType()), ("hub", T.DoubleType())])
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .union(edges.select(F.col("dst").alias("entity")))
@@ -982,6 +975,40 @@ def transe_energy(triples: DataFrame,
     )
 
 
+def _community_tallies(und: DataFrame, labels: DataFrame):
+    """Driver twin core of community_quality and modularity_profile:
+    (n_nodes, vol, internal, total_vol) per community from the
+    collected symmetric closure and (entity, community) rows, or None
+    when either frame fails the driver gate or an entity carries two
+    labels (the SQL tag join would count its edges once per label).
+    Guarded on BOTH frames fitting the cap: labels are entity-sized —
+    never bigger than the edge frame that produced them, but the API
+    accepts any frame."""
+    rows = _edge_rows_if_small(und)
+    if rows is None:
+        return None
+    lab_rows = _collect_if_small(labels.select("entity", "community"),
+                                 DRIVER_CAP_KEY)
+    if lab_rows is None:
+        return None
+    lab = dict(lab_rows)
+    if len(lab) != len(lab_rows):
+        return None
+    n_nodes: dict = {}
+    for _, c in lab_rows:
+        n_nodes[c] = n_nodes.get(c, 0) + 1
+    vol: dict = {}
+    internal: dict = {}
+    for s, d in rows:
+        if s not in lab or d not in lab:  # inner-join semantics
+            continue
+        cs = lab[s]
+        vol[cs] = vol.get(cs, 0) + 1
+        if cs == lab[d]:
+            internal[cs] = internal.get(cs, 0) + 1
+    return n_nodes, vol, internal, len(rows)
+
+
 def community_quality(edges: DataFrame, labels: DataFrame,
                       und: DataFrame | None = None) -> DataFrame:
     """Per-community quality profile (conductance) for a community
@@ -1006,53 +1033,24 @@ def community_quality(edges: DataFrame, labels: DataFrame,
         und = sym_closure(edges)  # feeds the tag join and total_vol once
     # size-adaptive (round 6): every output column is BIGINT
     # floor-division arithmetic on row counts, so the driver twin is
-    # exact; guarded on BOTH the und rows and the label rows fitting
-    # the cap (labels are entity-sized — never bigger than the edge
-    # frame that produced them, but the API accepts any frame).
-    rows = _edge_rows_if_small(und)
-    if rows is not None:
-        lab_rows = _collect_if_small(
-            labels.select("entity", "community"),
-            "deepref.graph.driver_max_edges")
-        if lab_rows is not None and len(dict(lab_rows)) == len(lab_rows):
-            import pandas as pd
-            import pyspark.sql.types as T
-
-            lab = dict(lab_rows)
-            n_nodes_m: dict = {}
-            for _, c in lab_rows:
-                n_nodes_m[c] = n_nodes_m.get(c, 0) + 1
-            vol: dict = {}
-            internal: dict = {}
-            for s, d in rows:
-                cs = lab.get(s)
-                if cs is None or d not in lab:  # inner-join semantics
-                    continue
-                vol[cs] = vol.get(cs, 0) + 1
-                if cs == lab[d]:
-                    internal[cs] = internal.get(cs, 0) + 1
-            tv = len(rows)
-            out_rows = []
-            for c in sorted(vol):
-                v, i = vol[c], internal.get(c, 0)
-                out_rows.append((
-                    c, n_nodes_m[c], v, i // 2, v - i,
-                    (v - i) * 1_000_000 // max(1, min(v, tv - v)),
-                ))
-            node_t = labels.schema["community"].dataType
-            schema = T.StructType([
-                T.StructField("community", node_t, False),
-                T.StructField("n_nodes", T.LongType(), False),
-                T.StructField("vol", T.LongType(), False),
-                T.StructField("internal_edges", T.LongType(), False),
-                T.StructField("cut", T.LongType(), False),
-                T.StructField("conductance_ppm", T.LongType(), False),
-            ])
-            return und.sparkSession.createDataFrame(
-                pd.DataFrame(out_rows, columns=[
-                    "community", "n_nodes", "vol", "internal_edges",
-                    "cut", "conductance_ppm"]),
-                schema=schema)
+    # exact.
+    tallies = _community_tallies(und, labels)
+    if tallies is not None:
+        n_nodes_m, vol, internal, tv = tallies
+        out_rows = []
+        for c in sorted(vol):
+            v, i = vol[c], internal.get(c, 0)
+            out_rows.append((
+                c, n_nodes_m[c], v, i // 2, v - i,
+                (v - i) * 1_000_000 // max(1, min(v, tv - v)),
+            ))
+        long_t = T.LongType()
+        return _twin_frame(
+            und.sparkSession, out_rows,
+            [("community", labels.schema["community"].dataType),
+             ("n_nodes", long_t), ("vol", long_t),
+             ("internal_edges", long_t), ("cut", long_t),
+             ("conductance_ppm", long_t)])
     lab_s = labels.select(F.col("entity").alias("src"), F.col("community").alias("c_src"))
     lab_d = labels.select(F.col("entity").alias("dst"), F.col("community").alias("c_dst"))
     tagged = und.join(lab_s, "src").join(lab_d, "dst")
@@ -1100,9 +1098,6 @@ def personalized_pagerank(edges: DataFrame, n_seeds: int = 3,
     # pagerank, seeds included (top-degree selection is deterministic)
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         outd: dict = {}
         deg_m: dict = {}
         nodes_s: set = set()
@@ -1125,17 +1120,12 @@ def personalized_pagerank(edges: DataFrame, n_seeds: int = 3,
                      + (DAMP_NUM * inflow.get(n, 0)) // DAMP_DEN)
                  for n in nodes_s}
         del base_i
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("is_seed", T.IntegerType(), False),
-            T.StructField("ppr", T.DoubleType(), False),
-        ])
         out_rows = [(n, 1 if n in seeds else 0, u[n] / float(UNIT))
                     for n in nodes_s if u[n] > 0]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "is_seed", "ppr"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, out_rows,
+            [("entity", edges.schema["src"].dataType),
+             ("is_seed", T.IntegerType()), ("ppr", T.DoubleType())])
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .union(edges.select(F.col("dst").alias("entity")))
@@ -1254,9 +1244,6 @@ def wl_refine(edges: DataFrame, iters: int = 2) -> DataFrame:
     if rows is not None:
         import hashlib
 
-        import pandas as pd
-        import pyspark.sql.types as T
-
         from deepref_spark.refsem import md5_mod_py
 
         deg: dict = {}
@@ -1286,17 +1273,11 @@ def wl_refine(edges: DataFrame, iters: int = 2) -> DataFrame:
         for v, c in colors.items():
             n, ex = agg.get(c, (0, None))
             agg[c] = (n + 1, v if ex is None or v < ex else ex)
-        node_t = und.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("wl_color", T.StringType(), False),
-            T.StructField("n_entities", T.LongType(), False),
-            T.StructField("exemplar", node_t, False),
-        ])
-        return und.sparkSession.createDataFrame(
-            pd.DataFrame(
-                [(c, n, ex) for c, (n, ex) in sorted(agg.items())],
-                columns=["wl_color", "n_entities", "exemplar"]),
-            schema=schema)
+        return _twin_frame(
+            und.sparkSession,
+            [(c, n, ex) for c, (n, ex) in sorted(agg.items())],
+            [("wl_color", T.StringType()), ("n_entities", T.LongType()),
+             ("exemplar", und.schema["src"].dataType)])
     colors = (
         und.groupBy(F.col("src").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -1436,9 +1417,6 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     # distributed peel below (which stays the at-scale path).
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         es = {(a, b) if a < b else (b, a) for a, b in rows if a != b}
         adj: dict = {}
         for a, b in es:
@@ -1449,16 +1427,11 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
             dropped = [e for e, s in sup.items() if s < k - 2]
             if not dropped:
                 node_t = edges.schema["src"].dataType
-                schema = T.StructType([
-                    T.StructField("e1", node_t, False),
-                    T.StructField("e2", node_t, False),
-                    T.StructField("support", T.LongType(), False),
-                ])
-                return edges.sparkSession.createDataFrame(
-                    pd.DataFrame(
-                        [(a, b, s) for (a, b), s in sorted(sup.items())],
-                        columns=["e1", "e2", "support"]),
-                    schema=schema)
+                return _twin_frame(
+                    edges.sparkSession,
+                    [(a, b, s) for (a, b), s in sorted(sup.items())],
+                    [("e1", node_t), ("e2", node_t),
+                     ("support", T.LongType())])
             for a, b in dropped:
                 es.discard((a, b))
                 adj[a].discard(b)
@@ -1581,9 +1554,6 @@ def bfs_distances(edges: DataFrame, n_seeds: int = 3,
     # the driver cap; the frontier loop below stays the at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         adj, seed_key = _und_maps(rows)
         seeds_l = sorted(adj, key=seed_key)[:n_seeds]
         dist = {v: 0 for v in seeds_l}
@@ -1598,14 +1568,10 @@ def bfs_distances(edges: DataFrame, n_seeds: int = 3,
             if not nxt:
                 break
             frontier = nxt
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("dist", T.IntegerType(), False),
-        ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(dist.items()), columns=["entity", "dist"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, sorted(dist.items()),
+            [("entity", edges.schema["src"].dataType),
+             ("dist", T.IntegerType())])
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -1741,9 +1707,6 @@ def anf_hyperball(edges: DataFrame, m: int = 16, hops: int = 2) -> DataFrame:
     if rows is not None:
         import hashlib
 
-        import pandas as pd
-        import pyspark.sql.types as T
-
         from deepref_spark.refsem import md5_mod_py
 
         adj_m, _ = _und_maps(rows)
@@ -1783,18 +1746,11 @@ def anf_hyperball(edges: DataFrame, m: int = 16, hops: int = 2) -> DataFrame:
             est_v = float(Decimal(repr(est_v)).quantize(
                 Decimal("0.01"), rounding=ROUND_HALF_UP))
             out_rows.append((v, len(ball), n_regs, est_v))
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("ball_exact", T.LongType(), False),
-            T.StructField("n_regs", T.LongType(), False),
-            T.StructField("anf_estimate", T.DoubleType(), False),
-        ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(out_rows),
-                         columns=["entity", "ball_exact", "n_regs",
-                                  "anf_estimate"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, sorted(out_rows),
+            [("entity", edges.schema["src"].dataType),
+             ("ball_exact", T.LongType()), ("n_regs", T.LongType()),
+             ("anf_estimate", T.DoubleType())])
     und = (
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -1918,11 +1874,8 @@ def taxonomy_closure(parent_edges: DataFrame,
     # closure is one collected delta-expansion instead of depth x 2
     # jobs. Same conf-gated discipline as linking.connected_components;
     # the semi-naive distributed loop stays the fallback.
-    collected = _collect_if_small(base, "deepref.taxonomy.driver_max_edges")
+    collected = _collect_if_small(base, DRIVER_CAP_KEY)
     if collected is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         parent_adj: dict = {}
         for c, p in collected:
             parent_adj.setdefault(c, []).append(p)
@@ -1936,15 +1889,10 @@ def taxonomy_closure(parent_edges: DataFrame,
             ]
             if not delta_rows:
                 node_t = base.schema["child"].dataType
-                schema = T.StructType([
-                    T.StructField("child", node_t, False),
-                    T.StructField("anc", node_t, False),
-                    T.StructField("depth", T.IntegerType(), False),
-                ])
-                return parent_edges.sparkSession.createDataFrame(
-                    pd.DataFrame(acc_rows,
-                                 columns=["child", "anc", "depth"]),
-                    schema=schema)
+                return _twin_frame(
+                    parent_edges.sparkSession, acc_rows,
+                    [("child", node_t), ("anc", node_t),
+                     ("depth", T.IntegerType())])
             acc_rows.extend(delta_rows)
         raise RuntimeError(
             f"taxonomy_closure did not converge in {max_rounds} rounds")
@@ -1966,30 +1914,6 @@ def taxonomy_closure(parent_edges: DataFrame,
         acc = acc.unionAll(delta).localCheckpoint(eager=False)
     raise RuntimeError(
         f"taxonomy_closure did not converge in {max_rounds} rounds")
-
-
-# Size-adaptive driver gate for the SCC family (round 6) — the same
-# measured trade as linking.DRIVER_CC_MAX_EDGES: below the cap, a
-# collected edge list + single-threaded Tarjan beats the multi-round
-# distributed loop by an order of magnitude; above it, the distributed
-# trim/color/sweep path below is the only thing that scales. The cap
-# bounds the one driver collect by construction (the VERDICT .collect()
-# audit discipline).
-DRIVER_SCC_MAX_EDGES = 200_000
-
-
-def _collect_if_small(edges: DataFrame, conf_key: str,
-                      default_cap: int = DRIVER_SCC_MAX_EDGES):
-    """Count the (materialized) 2-column edge frame; return the
-    collected edge list when it fits under the driver cap, else None
-    (caller falls through to the distributed path). The count doubles
-    as the materialization action for a lazy localCheckpoint, so the
-    upstream pipeline runs exactly once whichever path is taken."""
-    spark = edges.sparkSession
-    cap = int(spark.conf.get(conf_key, str(default_cap)))
-    if edges.count() > cap:
-        return None
-    return [(r[0], r[1]) for r in edges.collect()]
 
 
 def _tarjan_scc(edge_list) -> list:
@@ -2083,27 +2007,20 @@ def scc(edges: DataFrame, max_outer: int = 24,
     """
     E0 = edges.select("src", "dst").where(F.col("src") != F.col("dst")) \
         .distinct().localCheckpoint(eager=False)
-    collected = _collect_if_small(E0, "deepref.scc.driver_max_edges")
+    collected = _collect_if_small(E0, DRIVER_CAP_KEY)
     if collected is not None:
         if not collected:
             raise ValueError("scc: empty edge set")
-        import pandas as pd
-        import pyspark.sql.types as T
-
         rows = []
         for members in _tarjan_scc(collected):
             sid = min(members)
             n = len(members)
             rows.extend((m, sid, n) for m in members)
         node_t = E0.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("scc_id", node_t, False),
-            T.StructField("scc_size", T.LongType(), False),
-        ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(rows, columns=["entity", "scc_id", "scc_size"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, rows,
+            [("entity", node_t), ("scc_id", node_t),
+             ("scc_size", T.LongType())])
     remaining = (E0.select(F.col("src").alias("v"))
                  .union(E0.select(F.col("dst").alias("v")))
                  .distinct().localCheckpoint())
@@ -2228,9 +2145,6 @@ def harmonic_centrality(edges: DataFrame, n_seeds: int = 3,
     # the at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         adj, seed_key = _und_maps(rows)
         seeds_l = sorted(adj, key=seed_key)[:n_seeds]
         acc: dict = {}
@@ -2252,19 +2166,12 @@ def harmonic_centrality(edges: DataFrame, n_seeds: int = 3,
                     continue
                 n, h = acc.get(v, (0, 0))
                 acc[v] = (n + 1, h + grid // d)
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("n_seeds_reached", T.LongType(), False),
-            T.StructField("h_units", T.LongType(), False),
-            T.StructField("harmonic", T.DoubleType(), False),
-        ])
-        out_rows = [(v, n, h, h / float(grid))
-                    for v, (n, h) in sorted(acc.items())]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "n_seeds_reached",
-                                            "h_units", "harmonic"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession,
+            [(v, n, h, h / float(grid)) for v, (n, h) in sorted(acc.items())],
+            [("entity", edges.schema["src"].dataType),
+             ("n_seeds_reached", T.LongType()), ("h_units", T.LongType()),
+             ("harmonic", T.DoubleType())])
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -2339,12 +2246,9 @@ def scc_condensation(edges: DataFrame, labels: DataFrame | None = None,
     # levels and in/out degrees come from one collected pass instead
     # of rounds x 3 jobs of relaxation. Distributed relaxation below
     # stays the at-scale fallback.
-    q = _collect_if_small(ced, "deepref.scc.driver_max_edges")
+    q = _collect_if_small(ced, DRIVER_CAP_KEY)
     if q is not None:
         from collections import deque
-
-        import pandas as pd
-        import pyspark.sql.types as T
 
         adj: dict = {}
         indeg: dict = {}
@@ -2372,19 +2276,12 @@ def scc_condensation(edges: DataFrame, labels: DataFrame | None = None,
             raise RuntimeError(
                 "scc_condensation levels did not converge "
                 "(cycle in the quotient graph?)")
-        node_t = ced.schema["a"].dataType
-        qschema = T.StructType([
-            T.StructField("scc_id", node_t, False),
-            T.StructField("out_edges", T.LongType(), False),
-            T.StructField("in_edges", T.LongType(), False),
-            T.StructField("topo_level", T.IntegerType(), False),
-        ])
-        qdf = edges.sparkSession.createDataFrame(
-            pd.DataFrame(
-                [(v, outc.get(v, 0), inc.get(v, 0), lev_map[v])
-                 for v in lev_map],
-                columns=["scc_id", "out_edges", "in_edges", "topo_level"]),
-            schema=qschema)
+        qdf = _twin_frame(
+            edges.sparkSession,
+            [(v, outc.get(v, 0), inc.get(v, 0), lev_map[v]) for v in lev_map],
+            [("scc_id", ced.schema["a"].dataType),
+             ("out_edges", T.LongType()), ("in_edges", T.LongType()),
+             ("topo_level", T.IntegerType())])
         return (
             comps.join(F.broadcast(qdf), "scc_id", "left")
             .select(
@@ -2617,65 +2514,35 @@ def modularity_profile(edges: DataFrame, labels: DataFrame,
         und = sym_closure(edges)
     # size-adaptive (round 6): the ppm grid is all BIGINT floor
     # divisions on non-negative operands (Python // == Spark div
-    # there), so the driver twin is exact; same double gate as
-    # community_quality (und rows AND label rows under the cap). An
-    # EMPTY graph or labels disjoint from the edges fall through (the
-    # distributed agg emits a NULL __total__ row there — keep that
-    # single source of truth), and so do NULL entities/communities,
-    # whose join and grouping rules a dict walk does not reproduce.
-    rows = _edge_rows_if_small(und)
-    if rows:
-        lab_rows = _collect_if_small(
-            labels.select("entity", "community"),
-            "deepref.graph.driver_max_edges")
-        lab = dict(lab_rows or [])
-        if (lab_rows is not None and len(lab) == len(lab_rows)
-                and None not in lab and None not in lab.values()
-                and any(s in lab and d in lab for s, d in rows)):
-            import pandas as pd
-            import pyspark.sql.types as T
-
-            n_nodes_m: dict = {}
-            for _, c in lab_rows:
-                n_nodes_m[c] = n_nodes_m.get(c, 0) + 1
-            vol: dict = {}
-            internal: dict = {}
-            for s, d in rows:
-                cs = lab.get(s)
-                if cs is None or d not in lab:  # inner-join semantics
-                    continue
-                vol[cs] = vol.get(cs, 0) + 1
-                if cs == lab[d]:
-                    internal[cs] = internal.get(cs, 0) + 1
-            tv = len(rows)
-            out_rows = []
-            for c in sorted(vol):
-                v, i = vol[c], internal.get(c, 0)
-                vpm = v * 1_000_000 // tv
-                out_rows.append((
-                    c, n_nodes_m[c], i // 2, v,
-                    i * 1_000_000 // tv - vpm * vpm // 1_000_000,
-                ))
+    # there), so the driver twin is exact; same gate as
+    # community_quality. An EMPTY graph or labels disjoint from the
+    # edges (no tagged edge, so no vol) fall through: the distributed
+    # agg emits a NULL __total__ row there — keep that single source
+    # of truth.
+    tallies = _community_tallies(und, labels)
+    if tallies is not None and tallies[1]:
+        n_nodes_m, vol, internal, tv = tallies
+        out_rows = []
+        for c in sorted(vol):
+            v, i = vol[c], internal.get(c, 0)
+            vpm = v * 1_000_000 // tv
             out_rows.append((
-                "__total__",
-                sum(r[1] for r in out_rows),
-                sum(r[2] for r in out_rows),
-                sum(r[3] for r in out_rows),
-                sum(r[4] for r in out_rows),
+                c, n_nodes_m[c], i // 2, v,
+                i * 1_000_000 // tv - vpm * vpm // 1_000_000,
             ))
-            node_t = labels.schema["community"].dataType
-            schema = T.StructType([
-                T.StructField("community", node_t, False),
-                T.StructField("n_nodes", T.LongType(), False),
-                T.StructField("internal_edges", T.LongType(), False),
-                T.StructField("vol", T.LongType(), False),
-                T.StructField("modularity_ppm", T.LongType(), False),
-            ])
-            return und.sparkSession.createDataFrame(
-                pd.DataFrame(out_rows, columns=[
-                    "community", "n_nodes", "internal_edges", "vol",
-                    "modularity_ppm"]),
-                schema=schema)
+        out_rows.append((
+            "__total__",
+            sum(r[1] for r in out_rows),
+            sum(r[2] for r in out_rows),
+            sum(r[3] for r in out_rows),
+            sum(r[4] for r in out_rows),
+        ))
+        long_t = T.LongType()
+        return _twin_frame(
+            und.sparkSession, out_rows,
+            [("community", labels.schema["community"].dataType),
+             ("n_nodes", long_t), ("internal_edges", long_t),
+             ("vol", long_t), ("modularity_ppm", long_t)])
     lab_s = labels.select(F.col("entity").alias("src"),
                           F.col("community").alias("c_src"))
     lab_d = labels.select(F.col("entity").alias("dst"),
@@ -2744,12 +2611,9 @@ def weighted_sssp(edges: DataFrame, n_seeds: int = 2,
     if rows is not None:
         import hashlib
 
-        import pandas as pd
-        import pyspark.sql.types as T
-
         from deepref_spark.refsem import md5_mod_py
 
-        ew_l = {(s, d) for s, d in rows if s != d}
+        ew_l ={(s, d) for s, d in rows if s != d}
         wt = {(s, d): 1 + md5_mod_py(str(s) + "|" + str(d), 9)
               for s, d in ew_l}
         nodes_s = {s for s, _ in ew_l} | {d for _, d in ew_l}
@@ -2764,14 +2628,10 @@ def weighted_sssp(edges: DataFrame, n_seeds: int = 2,
                 if s in dist and dist[s] + w < new_d.get(d, dist[s] + w + 1):
                     new_d[d] = dist[s] + w
             dist = new_d
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("dist", T.LongType(), False),
-        ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(dist.items()), columns=["entity", "dist"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession, sorted(dist.items()),
+            [("entity", edges.schema["src"].dataType),
+             ("dist", T.LongType())])
     ew = (
         edges.select("src", "dst").where(F.col("src") != F.col("dst"))
         .distinct()
@@ -2834,9 +2694,6 @@ def katz_centrality(edges: DataFrame, max_hops: int = 4,
     # under the driver cap; distributed below at scale.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         adj_m, _ = _und_maps(rows)
         bi = int(beta_inv)
         w_m = {v: 1 for v in adj_m}
@@ -2852,17 +2709,11 @@ def katz_centrality(edges: DataFrame, max_hops: int = 4,
             scale = bi ** (max_hops - hop)
             for v in adj_m:
                 acc_m[v] += w_m[v] * scale
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("walks_out", T.LongType(), False),
-            T.StructField("katz_units", T.LongType(), False),
-        ])
-        out_rows = [(v, w_m[v], acc_m[v]) for v in sorted(adj_m)]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows,
-                         columns=["entity", "walks_out", "katz_units"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession,
+            [(v, w_m[v], acc_m[v]) for v in sorted(adj_m)],
+            [("entity", edges.schema["src"].dataType),
+             ("walks_out", T.LongType()), ("katz_units", T.LongType())])
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -2930,9 +2781,6 @@ def stress_centrality(edges: DataFrame, n_seeds: int = 4,
     # at-scale path.
     rows = _edge_rows_if_small(edges)
     if rows is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         adj, seed_key = _und_maps(rows)
         seeds_l = sorted(adj, key=seed_key)[:n_seeds]
         known: dict = {}  # seed -> {v: (d, sigma)}
@@ -2967,16 +2815,11 @@ def stress_centrality(edges: DataFrame, n_seeds: int = 4,
                     if d1 + d2 == dst:
                         n, st = agg.get(v, (0, 0))
                         agg[v] = (n + 1, st + sig1 * sig2)
-        node_t = edges.schema["src"].dataType
-        schema = T.StructType([
-            T.StructField("entity", node_t, False),
-            T.StructField("n_pairs", T.LongType(), False),
-            T.StructField("stress", T.LongType(), False),
-        ])
-        out_rows = [(v, n, st) for v, (n, st) in sorted(agg.items())]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "n_pairs", "stress"]),
-            schema=schema)
+        return _twin_frame(
+            edges.sparkSession,
+            [(v, n, st) for v, (n, st) in sorted(agg.items())],
+            [("entity", edges.schema["src"].dataType),
+             ("n_pairs", T.LongType()), ("stress", T.LongType())])
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -3314,18 +3157,15 @@ def bowtie_regions(edges: DataFrame, labels: DataFrame | None = None,
     # closures are one collected BFS each instead of rounds x 3 jobs
     # of semi-naive frontier expansion; the distributed loop below is
     # the at-scale fallback.
-    q = _collect_if_small(ced, "deepref.scc.driver_max_edges")
+    q = _collect_if_small(ced, DRIVER_CAP_KEY)
     if q is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
         fwd: dict = {}
         bwd: dict = {}
         for a, b in q:
             fwd.setdefault(a, []).append(b)
             bwd.setdefault(b, []).append(a)
 
-        def _bfs(adj: dict) -> list:
+        def _bfs(adj: dict) -> DataFrame:
             seen = {core}
             frontier = [core]
             while frontier:
@@ -3336,14 +3176,11 @@ def bowtie_regions(edges: DataFrame, labels: DataFrame | None = None,
                             seen.add(w)
                             nxt.append(w)
                 frontier = nxt
-            return sorted(seen)
+            return _twin_frame(spark, [(v,) for v in sorted(seen)],
+                               [("v", ced.schema["a"].dataType)])
 
-        node_t = ced.schema["a"].dataType
-        vschema = T.StructType([T.StructField("v", node_t, False)])
-        outset = spark.createDataFrame(
-            pd.DataFrame(_bfs(fwd), columns=["v"]), schema=vschema)
-        inset = spark.createDataFrame(
-            pd.DataFrame(_bfs(bwd), columns=["v"]), schema=vschema)
+        outset = _bfs(fwd)
+        inset = _bfs(bwd)
         return (
             comps
             .join(F.broadcast(inset.select(F.col("v").alias("scc_id"),

@@ -460,6 +460,9 @@ def sorted_neighborhood_pairs(entities: DataFrame,
     row per unordered candidate pair with the number of passes that
     proposed it (2-pass agreement is a cheap match prior).
     """
+    from pyspark.sql.types import LongType
+
+    from deepref_spark.operators import graph
     from deepref_spark.operators.metrics import global_ranked_cumsum
 
     # size-adaptive (round 6): the whole derivation is two sorted
@@ -472,15 +475,10 @@ def sorted_neighborhood_pairs(entities: DataFrame,
     # conservative) and dedupes on the driver — collecting the raw
     # projection is a narrow read, while counting the distinct would
     # pay the dedup shuffle before deciding to skip it.
-    raw = entities.select("entity")
-    spark = raw.sparkSession
-    cap = int(spark.conf.get("deepref.er.driver_max_entities", "200000"))
-    raw = raw.localCheckpoint(eager=False)  # count + collect: one run
-    if raw.count() <= cap:
-        import pandas as pd
-        import pyspark.sql.types as T
-
-        names = sorted({r[0] for r in raw.collect()})
+    raw = entities.select("entity").localCheckpoint(eager=False)
+    collected = graph._collect_if_small(raw, graph.DRIVER_CAP_KEY)
+    if collected is not None:
+        names = sorted({r[0] for r in collected})
         w = int(window)
         pair_passes: dict = {}
         for pass_id, keyf in ((1, lambda e: e), (2, lambda e: e[::-1])):
@@ -493,16 +491,10 @@ def sorted_neighborhood_pairs(entities: DataFrame,
                     pr = (lo, hi) if lo < hi else (hi, lo)
                     pair_passes.setdefault(pr, set()).add(pass_id)
         node_t = raw.schema["entity"].dataType
-        schema = T.StructType([
-            T.StructField("e1", node_t, False),
-            T.StructField("e2", node_t, False),
-            T.StructField("n_passes", T.LongType(), False),
-        ])
-        return spark.createDataFrame(
-            pd.DataFrame(
-                [(a, b, len(ps)) for (a, b), ps in sorted(pair_passes.items())],
-                columns=["e1", "e2", "n_passes"]),
-            schema=schema)
+        return graph._twin_frame(
+            raw.sparkSession,
+            [(a, b, len(ps)) for (a, b), ps in sorted(pair_passes.items())],
+            [("e1", node_t), ("e2", node_t), ("n_passes", LongType())])
     ent = raw.distinct()
     passes = []
     for pass_id, key_expr in ((1, "entity"), (2, "reverse(entity)")):

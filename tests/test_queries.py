@@ -181,6 +181,29 @@ def test_driver_window_is_all_oracle_bearing(registry):
     assert all(names.index(n) >= 50 for n in rows_only)
 
 
+def test_oracle_texts_and_registry_order_are_pinned(registry):
+    """Guardrail for moving registry code around: every oracle text and
+    the registry key order hash to the pinned sha256 values (rows-only
+    entries pin None). Re-pin only with a deliberate oracle change."""
+    import hashlib
+    import json
+    from pathlib import Path
+
+    from deepref_spark.queries import oracle_sql_for
+
+    def sha(text):
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    pinned = json.loads(
+        (Path(__file__).parent / "fixtures" / "registry_sha256.json").read_text())
+    assert sha("\n".join(registry)) == pinned["registry_order"]
+    got = {n: None if (o := oracle_sql_for(n)) is None else sha(o)
+           for n in registry}
+    changed = sorted(n for n in got.keys() | pinned["oracles"].keys()
+                     if got.get(n) != pinned["oracles"].get(n))
+    assert not changed, f"oracle text changed: {changed}"
+
+
 def test_queries_import_is_io_free():
     """`import deepref_spark.queries` must not import duckdb or read
     the vocab artifact (round-4 advice): oracles needing a duckdb
@@ -200,13 +223,26 @@ def test_queries_import_is_io_free():
     assert r.returncode == 0, "duckdb was imported at queries import time"
 
 
-def test_sessionize_fractional_gap_matches_oracle(spark, tmp_path):
+@pytest.mark.parametrize("name,events,n_rows", [
+    # 1800.5 s splits the first pair, an exact 1800 s gap does not
+    ("events_sessionize", """
+        (1, TIMESTAMP '2024-01-01 10:00:00',   7, 'click', 1.0, ''),
+        (2, TIMESTAMP '2024-01-01 10:30:00.5', 7, 'click', 2.0, ''),
+        (3, TIMESTAMP '2024-01-01 11:00:00.5', 7, 'click', 4.0, '')""", 2),
+    # 1800.5 s between the view and the click: two sessions, neither
+    # reaching click
+    ("events_session_funnel", """
+        (1, TIMESTAMP '2024-01-01 10:00:00.2', 7, 'view',  1.0, ''),
+        (2, TIMESTAMP '2024-01-01 10:30:00.7', 7, 'click', 2.0, '')""", 3),
+], ids=["events_sessionize", "events_session_funnel"])
+def test_sessionize_fractional_gap_matches_oracle(spark, tmp_path, name,
+                                                  events, n_rows):
     """A gap of 1800.5 s opens a new session under the oracle's
     fractional epoch(ts) > 1800 test; an exact 1800 s gap does not.
     Seconds truncated to whole numbers would merge the first pair."""
     import duckdb
 
-    from deepref_spark.queries import events_sessionize, oracle_sql_for
+    from deepref_spark import queries
 
     path = f"{tmp_path}/events.parquet"
     duckdb.sql(f"""
@@ -214,19 +250,16 @@ def test_sessionize_fractional_gap_matches_oracle(spark, tmp_path):
           SELECT CAST(event_id AS BIGINT) AS event_id, ts,
                  CAST(user_id AS BIGINT) AS user_id, event_type,
                  CAST(value AS DOUBLE) AS value, props
-          FROM (VALUES
-            (1, TIMESTAMP '2024-01-01 10:00:00',   7, 'click', 1.0, ''),
-            (2, TIMESTAMP '2024-01-01 10:30:00.5', 7, 'click', 2.0, ''),
-            (3, TIMESTAMP '2024-01-01 11:00:00.5', 7, 'click', 4.0, '')
+          FROM (VALUES {events}
           ) AS t(event_id, ts, user_id, event_type, value, props))
         TO '{path}' (FORMAT parquet)""")
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
     try:
         ok, detail = compare_query(
-            spark, con, events_sessionize, oracle_sql_for("events_sessionize"),
+            spark, con, getattr(queries, name), queries.oracle_sql_for(name),
             str(tmp_path))
     finally:
         con.close()
     assert ok, detail
-    assert detail == "2 rows"
+    assert detail == f"{n_rows} rows"
